@@ -54,20 +54,23 @@ final case class SearchResults(results: DataFrame, percentSearched: Double)
   *
   * Storage layout (`path/`): parquet files with columns
   * (id long, vector array<double>, metadata string-json,
-  * version long, deleted boolean). At 100 TB the log would be
-  * partitioned/bucketed by id range and compacted periodically; the
-  * current-view window then shuffles only new deltas.
+  * version long, deleted boolean). Each read takes one snapshot of the
+  * live log: its directory listed once, and per part file the
+  * version maximum and row count from the parquet footer. A freshly
+  * compacted generation (every row at version 0, no delta appended
+  * since) already holds one row per id, so it is served as a plain
+  * filtered scan — no window, no shuffle — and counted from its
+  * footers without a job; only a log with appended deltas pays the
+  * "latest version per id" window, which shuffles the whole log.
+  * At 100 TB the log would be partitioned/bucketed by id range and
+  * compacted periodically, so the window would run only between a
+  * write and the next compaction.
   */
 final class Collection(spark: SparkSession, val options: CollectionOptions, path: String) {
+  import Collection.{Footer, LogSchema, Snapshot}
 
-  private def emptyBatch(): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("id", LongType), StructField("vector", ArrayType(DoubleType)),
-        StructField("metadata", StringType), StructField("version", LongType),
-        StructField("deleted", BooleanType))))
-  }
+  private def emptyBatch(): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LogSchema)
 
   // resolve the filesystem FROM the collection path, not the default
   // scheme: a collection on s3a://... must list/delete on that store,
@@ -99,53 +102,80 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   private def dataPath(): String =
     completeGens().maxOption.map(n => s"$path.gen$n").getOrElse(path)
 
-  private def log(): DataFrame = {
-    val p = dataPath()
-    // "log absent" is only a missing path; corruption must surface,
-    // not silently read as an empty collection
-    try spark.read.parquet(p)
-    catch { case _: org.apache.spark.sql.AnalysisException =>
-      emptyBatch()
-    }
-  }
+  /** The log under `dir`, read with its known schema (inference would
+    * launch a job per read). */
+  private def read(dir: String): DataFrame =
+    spark.read.schema(LogSchema).parquet(dir)
 
-  /** Max version from parquet FOOTER statistics — O(files) metadata
-    * reads, zero row data: the scale answer to a monotonic version
-    * counter without a coordination service (every appended batch
-    * carries one constant version, so file-level min/max stats are
-    * exact). Falls back to a full aggregate only if a footer lacks
-    * stats for the column. */
-  private def nextVersion(): Long = {
+  /** Footer summaries by (file, length, modification time): part files
+    * are written once and never modified, so a summary never goes
+    * stale, and a search re-opens no footer. Each snapshot keeps only
+    * the live files' entries. */
+  @volatile private var footers = Map.empty[(String, Long, Long), Footer]
+
+  /** Footer statistics — O(files) metadata reads, zero row data: every
+    * appended batch carries one constant version, so file-level
+    * version maxima are exact. A footer that cannot be read, or that
+    * lacks version statistics, summarizes as unknown. */
+  private def footer(st: org.apache.hadoop.fs.FileStatus): Footer = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(dataPath())
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return 0L
-    val files = fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-    if (files.isEmpty) return 0L
     try {
-      var mx = -1L
-      files.foreach { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          reader.getFooter.getBlocks.forEach { b =>
-            b.getColumns.forEach { c =>
-              if (c.getPath.toDotString == "version") {
-                val st = c.getStatistics
-                if (st == null || !st.hasNonNullValue)
-                  throw new IllegalStateException(s"no version stats in $p")
-                mx = math.max(mx, st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-              }
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
+      try {
+        var mx = -1L
+        var rows = 0L
+        reader.getFooter.getBlocks.forEach { b =>
+          rows += b.getRowCount
+          b.getColumns.forEach { c =>
+            if (c.getPath.toDotString == "version") {
+              val s = c.getStatistics
+              if (s == null || !s.hasNonNullValue)
+                throw new IllegalStateException(s"no version stats in ${st.getPath}")
+              mx = math.max(mx, s.genericGetMax.asInstanceOf[java.lang.Long].longValue)
             }
           }
-        } finally reader.close()
-      }
-      mx + 1
-    } catch {
-      case _: Exception =>
-        log().agg(coalesce(max(col("version")), lit(-1L))).head().getLong(0) + 1
+        }
+        Footer(Some(mx), rows)
+      } finally reader.close()
+    } catch { case scala.util.control.NonFatal(_) => Footer(None, 0L) }
+  }
+
+  /** One look at the live log: its directory resolved and listed once,
+    * with every part file's footer summary. */
+  private def snapshot(): Snapshot = {
+    val dir = dataPath()
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val listed =
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val parts = listed.filter { st =>
+      val n = st.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith("_")
     }
+    val known = footers
+    val summaries = parts.map { st =>
+      val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+      key -> known.getOrElse(key, footer(st))
+    }
+    // an unknown summary is read again next time: it may be transient
+    footers = summaries.filter(_._2.maxVersion.isDefined).toMap
+    Snapshot(dir, dir != path, summaries.map(_._2))
+  }
+
+  /** The next batch's version. A generation's rows are version 0, so
+    * its deltas start at 1 — also after a compaction to zero rows,
+    * whose footer holds no version at all; otherwise that append would
+    * look like compacted rows. Falls back to a full aggregate only if
+    * a footer lacks stats for the column. */
+  private def nextVersion(): Long = {
+    val s = snapshot()
+    val mx =
+      if (s.files.forall(_.maxVersion.isDefined))
+        s.files.flatMap(_.maxVersion).maxOption.getOrElse(-1L)
+      else read(s.dir).agg(coalesce(max(col("version")), lit(-1L))).head().getLong(0)
+    if (s.generation) math.max(mx + 1, 1L) else mx + 1
   }
 
   /** Mutations serialize on this per-collection lock — the analogue of
@@ -203,11 +233,25 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   }
 
   /** Latest-version view minus tombstones. */
-  def current(): DataFrame =
-    Crud.currentView(log(), "id", "version", "deleted")
-      .select(col("id"), col("vector"), col("metadata"))
+  def current(): DataFrame = view(snapshot())
 
-  def documentCount(): Long = current().count()
+  /** A compacted snapshot's rows are its view; the version filter also
+    * keeps out a delta appended after the snapshot was taken. Any
+    * other log takes the "latest version per id" window. */
+  private def view(s: Snapshot): DataFrame = {
+    val live =
+      if (s.files.isEmpty) emptyBatch()
+      else if (s.compacted) read(s.dir).filter(col("version") === 0L && !col("deleted"))
+      else Crud.currentView(read(s.dir), "id", "version", "deleted")
+    live.select(col("id"), col("vector"), col("metadata"))
+  }
+
+  /** Live documents in a snapshot: the footer row counts when it is
+    * compacted (no job), else a count over the window. */
+  private def count(s: Snapshot): Long =
+    if (s.compacted) s.rows else view(s).count()
+
+  def documentCount(): Long = count(snapshot())
 
   /** Driver-sized BY CONTRACT: mirrors the reference API
     * (collection.go:326 returns `[]uint64` in memory). At scale use the
@@ -218,12 +262,18 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
 
   /** The reference's single search endpoint (collection.go:569):
     * dispatches on (k, radius, precision) exactly like the Go code. */
-  def search(args: SearchArgs): DataFrame = {
-    val base = current()
-    val filtered = args.filter match {
+  def search(args: SearchArgs): DataFrame = searchOn(filtered(snapshot(), args), args)
+
+  /** The snapshot's view under the search's metadata filter. */
+  private def filtered(s: Snapshot, args: SearchArgs): DataFrame = {
+    val base = view(s)
+    args.filter match {
       case Some(f) => base.filter(FilterCompiler.compileJson(f, col("metadata")))
       case None => base
     }
+  }
+
+  private def searchOn(filtered: DataFrame, args: SearchArgs): DataFrame =
     (args.vector, args.k, args.radius) match {
       case (None, _, _) | (_, 0, 0.0) =>
         // exhaustive listing with pagination, stable id order; no
@@ -265,28 +315,28 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
           AnnLsh.radius(filtered, "vector", qdf, r, options.lshPlanes,
             options.dimensionCount, options.distanceMethod)
     }
-  }
 
   /** As [[search]], also reporting PercentSearched
     * (collection.go:569-712): exhaustive modes touch the whole filtered
-    * corpus (100%); precision="medium" k-NN touches only the query's
-    * LSH bucket, and the fraction is that bucket's share of the
-    * corpus. */
+    * corpus (100%, or 0 for an empty collection); precision="medium"
+    * touches only the query's LSH bucket(s), and the fraction is that
+    * share of the filtered corpus. The result and the share come from
+    * ONE snapshot and one filtered view: on a compacted generation
+    * neither plans a window, and the exhaustive modes' emptiness check
+    * reads footers only. The medium share is still its own aggregate
+    * job over the filtered view. */
   def searchWithStats(args: SearchArgs): SearchResults = {
-    val results = search(args)
+    val s = snapshot()
+    val data = filtered(s, args)
+    val results = searchOn(data, args)
     def probedPct(q: Seq[Double], multiprobe: Boolean): Double = {
-      val base = current()
-      val filtered = args.filter match {
-        case Some(f) => base.filter(FilterCompiler.compileJson(f, col("metadata")))
-        case None => base
-      }
       val qdf = spark.createDataFrame(Seq(Tuple1(q))).toDF("qvec")
       if (options.lshTables > 1)
-        AnnLsh.percentSearchedForest(filtered, "vector", qdf,
+        AnnLsh.percentSearchedForest(data, "vector", qdf,
           options.lshTables, options.lshPlanes, options.dimensionCount,
           options.lshProbes)
       else
-        AnnLsh.percentSearched(filtered, "vector", qdf,
+        AnnLsh.percentSearched(data, "vector", qdf,
           options.lshPlanes, options.dimensionCount, multiprobe)
     }
     val pct = (args.vector, args.k, args.radius) match {
@@ -294,7 +344,7 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
         probedPct(q, multiprobe = false)
       case (Some(q), _, r) if r > 0.0 && args.precision != "exact" =>
         probedPct(q, multiprobe = true) // radius probes Hamming-1 too
-      case _ => if (documentCount() == 0L) 0.0 else 100.0
+      case _ => if (count(s) == 0L) 0.0 else 100.0
     }
     SearchResults(results, pct)
   }
@@ -431,6 +481,31 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
 
 object Collection {
 
+  /** The log's columns: what every batch appends and every read
+    * declares. */
+  private val LogSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("id", LongType), StructField("vector", ArrayType(DoubleType)),
+      StructField("metadata", StringType), StructField("version", LongType),
+      StructField("deleted", BooleanType)))
+  }
+
+  /** One part file's footer summary: its largest version (None when
+    * the footer is unreadable or lacks version statistics; -1 when it
+    * holds no row group) and its row count. */
+  private final case class Footer(maxVersion: Option[Long], rows: Long)
+
+  /** The live log as one read sees it: its directory, whether that is
+    * a compacted generation rather than the original log, and its part
+    * files' footers. */
+  private final case class Snapshot(dir: String, generation: Boolean, files: Seq[Footer]) {
+    /** A generation with no delta appended since its compaction: every
+      * row is at version 0 (deltas into a generation start at 1). */
+    def compacted: Boolean = generation && files.forall(_.maxVersion.exists(_ <= 0L))
+    def rows: Long = files.map(_.rows).sum
+  }
+
   private def metaPath(path: String) = s"$path.options.json"
 
   /** NewCollection (collection.go:224): persists the options next to
@@ -551,15 +626,13 @@ object Collection {
       num("lshTables", Some(1)), num("lshProbes", Some(1)))
   }
 
-  /** Reopen an existing collection from its persisted options —
-    * through [[parseOptionsJson]], the same parser a dump header
-    * goes through (one format, one parser; Jackson reads the older
-    * multi-line sidecars as readily as the single-line form, and a
-    * driver-side read of the sidecar's OWN filesystem replaces a
-    * whole Spark json job for a one-object file). Older collections
-    * predate lshTables/lshProbes; absent -> single-table,
-    * single-probe (the parser's defaults). */
-  def open(spark: SparkSession, path: String): Collection = {
+  /** The persisted options of the collection at `path`, read
+    * driver-side from the sidecar's OWN filesystem through
+    * [[parseOptionsJson]] — the same parser a dump header goes through
+    * (one format, one parser; Jackson reads the older multi-line
+    * sidecars as readily as the single-line form, and a driver-side
+    * read replaces a whole Spark json job for a one-object file). */
+  private def readOptions(spark: SparkSession, path: String): CollectionOptions = {
     val mp = new org.apache.hadoop.fs.Path(metaPath(path))
     val hfs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = hfs.open(mp)
@@ -570,8 +643,14 @@ object Collection {
       while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
       new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
     } finally in.close()
-    new Collection(spark, parseOptionsJson(json), path)
+    parseOptionsJson(json)
   }
+
+  /** Reopen an existing collection from its persisted options. Older
+    * collections predate lshTables/lshProbes; absent -> single-table,
+    * single-probe (the parser's defaults). */
+  def open(spark: SparkSession, path: String): Collection =
+    new Collection(spark, readOptions(spark, path), path)
 
   private def q(s: String): String =
     "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString } + "\""
@@ -590,9 +669,7 @@ object Collection {
       .filter(_.getName.endsWith(".options.json"))
       .map { p =>
         val dataPath = p.toString.stripSuffix(".options.json")
-        val name = spark.read.option("multiLine", "true").json(p.toString)
-          .collect().head.getAs[String]("name")
-        (name, dataPath)
+        (readOptions(spark, dataPath).name, dataPath)
       }
       .sortBy(_._1)
   }

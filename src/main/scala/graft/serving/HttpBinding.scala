@@ -40,6 +40,8 @@ import org.apache.spark.sql.SparkSession
   *    localhost — documented divergence, same spirit as the uniform
   *    JSON errors.
   *
+  * Responses leave without Nagle's delay: see [[HttpBinding.create]].
+  *
   * `port = 0` binds an ephemeral port (tests read [[boundPort]]).
   * Requests dispatch on a small thread pool; [[Api]]'s registry lock
   * provides the same consistency the Go server's `s.mutex` does. */
@@ -56,8 +58,7 @@ final class HttpBinding private[graft] (
            maxBodyBytes: Int = HttpBinding.DefaultMaxBody) =
     this(api.handle(_, _, _, _), port, maxBodyBytes)
 
-  private val server: HttpServer =
-    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server: HttpServer = HttpBinding.create(port)
 
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
@@ -181,6 +182,19 @@ object HttpBinding {
     * KB of vector + metadata each, thousands per bulk call) while an
     * order of magnitude under any heap that runs Spark. */
   val DefaultMaxBody: Int = 8 << 20
+
+  /** A loopback listener whose connections set TCP_NODELAY. The JDK
+    * server writes a response's headers and body as separate segments;
+    * with Nagle's algorithm on, the body waits for the client's
+    * (delayed, ~40 ms) ACK of the headers, which stalled every response
+    * by about 40 ms on loopback. The JDK reads
+    * `sun.net.httpserver.nodelay` once, when its first server is
+    * created, and applies it to every `com.sun.net.httpserver` server in
+    * the JVM, so it is set here, before the first create. */
+  private def create(port: Int): HttpServer = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
 
   /** Uniform JSON error body, matching [[Api]]'s `{"error": msg}`
     * shape (messages here are fixed ASCII; escape anyway so an

@@ -3,18 +3,22 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.core.{Collection, CollectionOptions, SearchArgs}
-import graft.operators.Knn
+import graft.operators.{Crud, Knn}
 
 class CollectionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def newCollection(quantization: Int = 64): Collection = {
+  private def newCollection(quantization: Int = 64): Collection =
+    newCollectionAt(quantization)._1
+
+  /** A new collection and the path of its log. */
+  private def newCollectionAt(quantization: Int = 64): (Collection, String) = {
     val dir = Files.createTempDirectory("graft-coll").toFile
     dir.delete()
-    Collection.create(spark,
+    (Collection.create(spark,
       CollectionOptions("test", dimensionCount = 4,
         distanceMethod = Knn.Euclidean, quantization = quantization),
-      dir.getAbsolutePath)
+      dir.getAbsolutePath), dir.getAbsolutePath)
   }
 
   private def docs3 = Seq(
@@ -286,5 +290,138 @@ class CollectionSpec extends SparkSpec {
     }
     val (n, dims, bytes) = c.stats()
     assert(n == 1 && dims == 4 && bytes == 4)
+  }
+
+  // ---- the compacted, no-delta read path ----
+
+
+  /** Every physical operator of `df`'s final plan (executed first, so
+    * adaptive execution has fixed it). */
+  private def operators(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    df.collect()
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case p => p }
+  }
+
+  /** Spark jobs `body` submits. Status events arrive in order, so once
+    * a fence job run after `body` is visible, so is every job of it. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-probe-${System.nanoTime()}"
+    sc.setJobGroup(group, "probe")
+    try body finally sc.clearJobGroup()
+    sc.setJobGroup(group + "-fence", "fence")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(group + "-fence").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(group + "-fence").nonEmpty)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  private def spread(n: Int, from: Long = 0L) = (0 until n).map { i =>
+    val x = i + from
+    (x, Seq(math.sin(x * 1.7) * 3, math.cos(x * 2.3) * 3, math.sin(x * 0.9), x * 0.01),
+      s"""{"tag": "${if (x % 2 == 0) "a" else "b"}"}""")
+  }.toDF("id", "vector", "metadata")
+
+  test("a compacted collection is served by a scan with no window or shuffle") {
+    val c = newCollection()
+    c.addDocuments(spread(40))
+    c.removeDocuments(Seq(3L))
+    val before = operators(c.current())
+    assert(before.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
+      "a log with deltas takes the latest-version window")
+    c.compact()
+    val view = operators(c.current())
+    assert(!view.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]) &&
+      !view.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]),
+      view.mkString("\n"))
+    val knn = operators(c.search(SearchArgs(vector = Some(Seq(0.0, 1.0, 0.0, 0.0)),
+      k = 5, precision = "exact")))
+    assert(!knn.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
+      knn.mkString("\n"))
+    // the one exchange left broadcasts the single query row
+    assert(knn.forall {
+      case e: org.apache.spark.sql.execution.exchange.Exchange =>
+        e.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeLike]
+      case _ => true
+    }, knn.mkString("\n"))
+  }
+
+  test("a compacted collection counts its documents without a Spark job") {
+    val c = newCollection()
+    c.addDocuments(spread(40))
+    c.removeDocuments(Seq(3L, 4L))
+    var n = 0L
+    assert(jobsDuring { n = c.documentCount() } > 0, "the probe must see a window count")
+    assert(n == 38)
+    c.compact()
+    assert(jobsDuring { n = c.documentCount() } == 0)
+    assert(n == 38)
+    // an exhaustive search's percent_searched needs only that count
+    var pct = 0.0
+    assert(jobsDuring {
+      pct = c.searchWithStats(SearchArgs(vector = Some(Seq(0.0, 1.0, 0.0, 0.0)),
+        k = 3, precision = "exact")).percentSearched
+    } == 0)
+    assert(pct == 100.0)
+  }
+
+  test("reads after compact, insert, update and delete equal the window over the raw log") {
+    val (c, path) = newCollectionAt()
+    c.addDocuments(spread(40))
+    c.removeDocuments(Seq(7L))
+    val q = Seq(0.5, 1.0, -0.2, 0.1)
+    def check(step: String): Unit = {
+      val raw = Crud.currentView(
+          spark.read.parquet(s"$path.gen${c.generations.max}"), "id", "version", "deleted")
+        .select("id", "vector", "metadata")
+        .as[(Long, Seq[Double], String)].collect().sortBy(_._1).toSeq
+      val got = c.current().as[(Long, Seq[Double], String)].collect().sortBy(_._1).toSeq
+      assert(got == raw, step)
+      assert(c.documentCount() == raw.size, step)
+      def dist(v: Seq[Double]) = math.sqrt(v.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)
+      val ranked = raw.map(r => (r._1, dist(r._2))).sortBy { case (id, d) => (d, id) }
+      val knn = c.searchWithStats(SearchArgs(vector = Some(q), k = 5, precision = "exact"))
+      assert(knn.results.select("id").as[Long].collect().toSeq == ranked.take(5).map(_._1), step)
+      assert(knn.percentSearched == 100.0, step)
+      val near = c.search(SearchArgs(vector = Some(q), radius = 2.5, precision = "exact"))
+        .select("id").as[Long].collect().sorted.toSeq
+      assert(near == ranked.filter(_._2 <= 2.5).map(_._1).sorted, step)
+      val page = c.search(SearchArgs(limit = 4, offset = 3, filter = Some("tag == 'a'")))
+        .select("id").as[Long].collect().toSeq
+      assert(page == raw.filter(_._3.contains("\"a\"")).map(_._1).slice(3, 7), step)
+    }
+    c.compact()
+    check("compacted")
+    // new ids plus ids already in the compacted base (5 moves, 7 returns)
+    c.addDocuments(spread(3, from = 100L).union(
+      Seq((5L, Seq(0.5, 1.0, -0.2, 0.1), """{"tag": "a"}"""),
+        (7L, Seq(9.0, 9.0, 9.0, 9.0), """{"tag": "a"}""")).toDF("id", "vector", "metadata")))
+    check("insert")
+    c.updateMetadata(12L, """{"tag": "b"}""")
+    c.updateMetadata(13L, """{"tag": "a"}""")
+    check("update")
+    c.removeDocuments(Seq(5L, 100L, 20L))
+    check("delete")
+    c.compact()
+    check("compacted again")
+  }
+
+  test("an append after a compaction to zero rows starts at version 1") {
+    val (c, path) = newCollectionAt()
+    c.addDocuments(docs3)
+    c.removeDocuments(Seq(1L, 2L, 3L))
+    c.compact()
+    assert(c.documentCount() == 0 && c.current().isEmpty)
+    c.addDocuments(Seq((9L, Seq(1.0, 1.0, 1.0, 1.0), "{}")).toDF("id", "vector", "metadata"))
+    val versions = spark.read.parquet(s"$path.gen${c.generations.max}")
+      .filter(col("id") === 9L).select("version").as[Long].collect().toSeq
+    assert(versions.size == 1 && versions.head >= 1L, versions)
+    assert(c.getAllIds() == Seq(9L) && c.documentCount() == 1)
+    c.removeDocuments(Seq(9L))
+    assert(c.getAllIds().isEmpty && c.documentCount() == 0)
   }
 }
